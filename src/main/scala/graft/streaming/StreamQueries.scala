@@ -3,8 +3,9 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Reg
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming twins of the batch operators (SURVEY.md §2.9).
@@ -84,6 +85,51 @@ object StreamQueries {
     }
   }
 
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The stateful-operator queries (transformWithState and friends) run
+    * on the RocksDB state store. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** documents.parquet schema, as the stream copies of it are read. */
+  private val DocSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** Run `body` with `kvs` set in `s`'s session conf, then restore each
+    * key's prior value — or unset a key that was absent — also when
+    * `body` throws. Every conf scope of the streaming layer (drain
+    * widths, the RocksDB state store) goes through here. It mutates the
+    * CALLER's session on purpose: the memory sink registers its view on
+    * `df.sparkSession`, and graft.Shared / graft.Tables key their memos
+    * on session identity.
+    *
+    * SEQUENTIAL CONTRACT: the mutation is visible to anything else
+    * running on `s` meanwhile, so two graded queries must not run
+    * concurrently on one SparkSession — Verify and Bench both run
+    * queries strictly sequentially. A service embedding these ops
+    * concurrently should give each its own `spark.newSession()` (cheap:
+    * shares the SparkContext, forks conf). */
+  private[graft] def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Start → processAllAvailable → stop: the one drain loop of every
+    * processing-time query here (memory sink, file sink, foreachBatch). */
+  private def runToEnd(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
   /** Run a streaming query to a memory sink and return the final table.
     * State-store instance count = shuffle partitions at query start; per-
     * partition commit overhead dominates a small finite drain, so the
@@ -92,31 +138,10 @@ object StreamQueries {
     * deliberate exceptions re-A/B'd the same session: the stream-stream
     * interval joins run at 1 (two-sided state doubles per-partition
     * commit cost) and the session-window/dedup-watermark family stays at
-    * 4 (heavier per-key state; 2 was ~0.1 s slower each). The session
-    * setting is restored after. (On a live cluster this knob is sized to
-    * key cardinality.)
-    *
-    * SEQUENTIAL CONTRACT: the temporary session-conf mutation means two
-    * graded queries must not drain concurrently on one SparkSession —
-    * Verify and Bench both run queries strictly sequentially. A service
-    * embedding these ops concurrently should isolate each drain on
-    * `spark.newSession()` (cheap: shares the SparkContext, forks conf). */
-  private def drain(df: DataFrame, mode: String, partitions: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    try {
-      // fresh checkpoint per start: the memory sink cannot recover one
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation",
-          s"/dev/shm/graft-ckpt/${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
-  }
+    * 4 (heavier per-key state; 2 was ~0.1 s slower each). (On a live
+    * cluster this knob is sized to key cardinality.) */
+  private def drain(df: DataFrame, mode: String, partitions: Int = 2): DataFrame =
+    toMemory(df, mode, partitions.toString)(runToEnd)
 
   /** Micro-batch parallelism of the seven INCREMENTAL SCREENS (the
     * foreachBatch store/band/read-out pipelines): 4 shuffle partitions
@@ -143,32 +168,36 @@ object StreamQueries {
     * (awaitTermination, no processAllAvailable/stop from the caller).
     * This is the scheduled-incremental-job trigger; grading one candle
     * query through it proves the trigger in the oracle-checked path, not
-    * just in AvailableNowSpec. Same SEQUENTIAL CONTRACT as drain(). */
-  private def drainAvailableNow(df: DataFrame, mode: String): DataFrame = {
+    * just in AvailableNowSpec. */
+  private def drainAvailableNow(df: DataFrame, mode: String): DataFrame =
+    toMemory(df, mode, drainParts) { w =>
+      val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      require(q.awaitTermination(120000), "AvailableNow drain did not terminate")
+    }
+
+  /** Run `df` into a fresh memory sink under `partitions` shuffle
+    * partitions and return the sink's table. The table is resolved
+    * first, then its temp view is dropped and its checkpoint dir deleted:
+    * the resolved plan holds the sink itself, so the result stays whole
+    * and a long-lived session does not grow by one view and one dir per
+    * call. */
+  private def toMemory(df: DataFrame, mode: String, partitions: String)(
+      run: DataStreamWriter[Row] => Unit): DataFrame = {
     val spark = df.sparkSession
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", drainParts)
+    // fresh checkpoint per start: the memory sink cannot recover one
+    val ckpt = s"/dev/shm/graft-ckpt/${name}_${java.util.UUID.randomUUID().toString.take(8)}"
     try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation",
-          s"/dev/shm/graft-ckpt/${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(120000), "AvailableNow drain did not terminate")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+      withConf(spark, ShufflePartitions -> partitions) {
+        run(df.writeStream.format("memory").queryName(name).outputMode(mode)
+          .option("checkpointLocation", ckpt))
+      }
+      spark.table(name)
+    } finally {
+      spark.catalog.dropTempView(name)
+      rmrf(new java.io.File(ckpt))
+    }
   }
-
-  /** One-file store-write width for the incremental screens (A/B knob,
-    * round 16): `repartition(1)` (default — the round-16 1000× fix:
-    * `coalesce(1)` is NARROW and collapses the upstream batch×store band
-    * join to one task) vs `coalesce(1)` via
-    * SPARK_GRAFT_STORE_ONEFILE=coalesce for the fixture-scale A/B. */
-  private def oneFileStore(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_STORE_ONEFILE").contains("coalesce"))
-      df.coalesce(1)
-    else df.repartition(1)
 
   /** Recursive delete for /dev/shm scratch that is rebuilt per invocation
     * — file-sink queries key their output on the sf dir and wipe it here
@@ -195,7 +224,7 @@ object StreamQueries {
     * Idempotence: parts are keyed by batchId — an at-least-once replay
     * REPLACES its own earlier part (the same rule as the batchId-keyed
     * OVERWRITE sinks it mirrors). The parquet store stays the source of
-    * truth: every graded run wipes its store first (the rmrf above), so
+    * truth: every graded run wipes its store first ([[screen]]), so
     * accumulator and store start — and stay — in lockstep; a deployment
     * resuming over an existing store would re-seed parts from the
     * surviving batch= dirs before starting the query.
@@ -228,16 +257,60 @@ object StreamQueries {
   }
   private[streaming] object BatchAcc { val FoldAt = 32 }
 
-  /** Debug hook (round 17): print a screen's PER-BATCH join plan when
-    * `SPARK_GRAFT_EXPLAIN_BATCH` is set. The accumulator change lives
-    * inside foreachBatch, where graft.Plans cannot see it (the drains
-    * are excluded from the dump by design) — the plans/r17 before/after
-    * evidence for the store-side InMemory scan is captured through this.
-    * No-op in every graded run (the driver never sets the variable). */
-  private def explainBatch(tag: String, bid: Long, df: DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_BATCH"))
-      println(s"==== $tag batch=$bid ====\n" + df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+  /** One micro-batch of an incremental [[screen]]: its rows, its id, and
+    * writers into the screen's named stores. */
+  private final class ScreenBatch(val df: DataFrame, bid: Long,
+      dirOf: Map[String, String], accs: scala.collection.mutable.Map[String, BatchAcc]) {
+    def sp: SparkSession = df.sparkSession
+
+    /** Write `out` as the one file of `store`'s `batch=<bid>` part and
+      * return the part's path. batchId-keyed OVERWRITE (round 14, the
+      * dsir ADVICE r13 fix applied family-wide): foreachBatch is
+      * at-least-once, and several read-outs count or emit stored rows
+      * with no dedup, so a replay must REPLACE its own earlier attempt,
+      * never add a second copy. One file per batch: stores are read
+      * back every batch, and shuffle-partition-many tiny files would make
+      * the read-back dominate the drain. repartition(1), NOT coalesce(1)
+      * (round 16): coalesce is NARROW and collapses the upstream
+      * batch×store band join itself to one task; repartition keeps one
+      * file but puts a real exchange between the parallel work and the
+      * writer (semdedup 516 → 180 s @1000×, BASELINE.md round-16). */
+    def write(out: DataFrame, store: String): String = {
+      val path = s"${dirOf(store)}/batch=$bid"
+      out.repartition(1).write.mode("overwrite").parquet(path)
+      path
+    }
+
+    /** [[write]], then add the part to `store`'s [[BatchAcc]]: returns
+      * (this batch's read-back, union of all batches so far). */
+    def append(out: DataFrame, store: String): (DataFrame, DataFrame) =
+      accs.getOrElseUpdate(store, new BatchAcc).add(sp, bid, write(out, store))
+  }
+
+  /** The incremental-screen lifecycle shared by the six foreachBatch
+    * screens: wipe the named stores (`/dev/shm/graft-<family>/<store>_<tag>`)
+    * and the checkpoint (`/dev/shm/graft-ckpt/<family>_<tag>`), stream
+    * `srcDir` one file per trigger, run `perBatch` on every micro-batch
+    * at [[drainParts]] shuffle partitions until the input is drained,
+    * then release the stores' accumulators. Returns a reader of the
+    * final stores for the screen's read-out. */
+  private def screen(s: SparkSession, family: String, tag: String, srcDir: String,
+      schema: StructType, stores: Seq[String])(perBatch: ScreenBatch => Unit): String => DataFrame = {
+    val dirOf = stores.map(n => n -> s"/dev/shm/graft-$family/${n}_$tag").toMap
+    val ckpt = s"/dev/shm/graft-ckpt/${family}_$tag"
+    (dirOf.values.toSeq :+ ckpt).foreach(p => rmrf(new java.io.File(p)))
+    val stream = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val accs = scala.collection.mutable.Map[String, BatchAcc]()
+    try withConf(s, ShufflePartitions -> drainParts) {
+      runToEnd(stream.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          perBatch(new ScreenBatch(batch, bid, dirOf, accs))
+        })
+    } finally accs.values.foreach(_.close())
+    store => s.read.parquet(dirOf(store))
+  }
 
   val all: Seq[Reg] = Seq(
 
@@ -674,12 +747,8 @@ object StreamQueries {
       (s, dir) => {
         val mg = udaf(new graft.functions.MisraGriesAggregator(2000),
           org.apache.spark.sql.Encoders.STRING)
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("lang", StringType), StructField("source", StringType),
-          StructField("n_chars", LongType)))
         val srcDir = graft.sources.Fixtures.ensureDocStreamFiles(s, dir, n = 3)
-        val stream = s.readStream.schema(docSchema)
+        val stream = s.readStream.schema(DocSchema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir)
           .select(explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
         val summary = drainComplete(stream.agg(mg(col("tok")).as("summary")))
@@ -766,10 +835,7 @@ object StreamQueries {
     Reg("streaming_gap_alarm",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val alarms = StatefulOps.gapAlarms(readEventsStream(s, dir),
               gapUs = 1800L * 1000000L, delay = "0 seconds")
             .toDF("event_type", "ts_us", "kind")
@@ -778,9 +844,6 @@ object StreamQueries {
               date_format(timestamp_micros(col("ts_us")), fmt).as("last_ts"),
               col("kind"))
             .orderBy("event_type", "last_ts")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -809,10 +872,7 @@ object StreamQueries {
     Reg("streaming_session_timers",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val sessions = StatefulOps.timerSessions(readEventsStream(s, dir),
               gapUs = 1800L * 1000000L, delay = "0 seconds")
             .toDF("user_id", "start_us", "last_us", "n_events")
@@ -822,9 +882,6 @@ object StreamQueries {
               date_format(timestamp_micros(col("last_us")), fmt).as("end_ts"),
               col("n_events"))
             .orderBy("user_id", "start_ts")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -1056,16 +1113,11 @@ object StreamQueries {
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("event_type"), col("open"), col("high"), col("low"), col("close"),
             round(col("volume"), 4).as("volume"), col("trades"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainParts)
-        try {
-          val q = candles.writeStream.format("parquet").outputMode("append")
+        withConf(s, ShufflePartitions -> drainParts) {
+          runToEnd(candles.writeStream.format("parquet").outputMode("append")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+            .option("checkpointLocation", ckpt))
+        }
         s.read.parquet(out).orderBy("bucket", "event_type")
       },
       Some("""
@@ -1152,19 +1204,14 @@ object StreamQueries {
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("event_type"), col("open"), col("high"), col("low"),
             col("close"), round(col("volume"), 4).as("volume"), col("trades"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainParts)
-        try {
-          val q = candles.writeStream.outputMode("update")
+        withConf(s, ShufflePartitions -> drainParts) {
+          runToEnd(candles.writeStream.outputMode("update")
             .option("checkpointLocation", ckpt)
             .foreachBatch { (batch: DataFrame, batchId: Long) =>
               batch.withColumn("batch_id", lit(batchId))
                 .write.mode("append").parquet(out)
-            }
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+            })
+        }
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("bucket"), col("event_type"))
           .orderBy(col("batch_id").desc)
@@ -1224,10 +1271,7 @@ object StreamQueries {
     // across engines at representation boundaries).
     Reg("ema_by_series",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val ema = StatefulOps.emaBySeries(readEventsStream(s, dir), alpha = 0.5)
             .toDF("event_type", "ts_us", "ema")
           drain(ema, "update")
@@ -1235,9 +1279,6 @@ object StreamQueries {
             .agg(count(lit(1)).as("n_events"),
               max_by(col("ema"), col("ts_us")).as("ema_final"))
             .orderBy("event_type")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -1265,10 +1306,7 @@ object StreamQueries {
     // epoch in-order splits vs one-shot Java regex).
     Reg("streaming_event_seq_cep",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val cep = StatefulOps.seqPatternCounts(readEventsStream(s, dir))
             .toDF("user_id", "n_events", "n_conv", "n_alt_conv",
               "max_error_run", "n_error_pairs")
@@ -1280,9 +1318,6 @@ object StreamQueries {
               max(col("max_error_run")).as("max_error_run"),
               max(col("n_error_pairs")).as("n_error_pairs"))
             .orderBy("user_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -1480,10 +1515,7 @@ object StreamQueries {
     // counters monotone → max() per key grades any batching.
     Reg("streaming_funnel_timeout",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val f = StatefulOps.funnelTimeouts(readEventsStream(s, dir),
               timeoutUs = 4L * 3600L * 1000000L, delay = "0 seconds")
             .toDF("user_id", "n_views", "n_abandoned")
@@ -1492,9 +1524,6 @@ object StreamQueries {
             .agg(max(col("n_views")).as("n_views"),
               max(col("n_abandoned")).as("n_abandoned"))
             .orderBy("user_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -1694,10 +1723,7 @@ object StreamQueries {
     // every purchase emits exactly once, so the drain needs no re-agg.
     Reg("streaming_attribution",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           val att = StatefulOps
             .lastTouchAttribution(readEventsStream(s, dir), 86400000000L)
             .toDF("purchase_id", "user_id", "ts_us", "value_cents",
@@ -1709,9 +1735,6 @@ object StreamQueries {
               col("value_cents"), col("touch_id"), col("touch_type"),
               col("mins_since_touch"))
             .orderBy("purchase_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some(graft.ts.TsQueries.attributionOracleSql)),
@@ -1757,10 +1780,7 @@ object StreamQueries {
     // as pareto_frontier_docs, partitioned by lang.
     Reg("streaming_pareto_frontier",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(s, RocksDb) {
           import org.apache.spark.sql.expressions.Window
           val path = graft.sources.Fixtures.ensureDocStreamFiles(s, dir, n = 3)
           val schema = s.read.parquet(path).schema // footer-only probe
@@ -1777,9 +1797,6 @@ object StreamQueries {
             .filter(col("seq") === col("max_seq"))
             .select(col("lang"), col("doc_id"), col("n_tokens"), col("n_vocab"))
             .orderBy(col("lang"), col("n_tokens").desc, col("doc_id"))
-        } finally prev match {
-          case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""
@@ -1806,82 +1823,41 @@ object StreamQueries {
     * assert arrival-order independence against the batch result. */
   private[graft] def editdistIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
-    val store = s"/dev/shm/graft-editdist/store_$tag"
-    val pairsOut = s"/dev/shm/graft-editdist/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/editdist_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
     val tokSchema = StructType(Seq(
       StructField("tok", StringType), StructField("cnt", LongType)))
-    val stream = s.readStream.schema(tokSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val vars = batch.select(col("tok"), col("cnt"), explode(expr(
-            """array_union(array(tok),
-               transform(sequence(1, length(tok)),
-                 i -> concat(substring(tok, 1, i - 1), substring(tok, i + 1, length(tok)))))"""))
-            .as("v"))
-          // one part-file per batch (the semdedup store rationale): the
-          // index is read back every batch, so shuffle-partition-many tiny
-          // files per batch would make the read-back dominate the drain.
-          // batchId-keyed OVERWRITE (round 14): this screen's read-out
-          // is replay-tolerant (distinct), but the keyed sink keeps the
-          // whole incremental family uniformly idempotent.
-          // repartition(1), not coalesce(1), family-wide (round 16):
-          // see semdedupIncrementalRun's store write for the measured
-          // narrow-collapse mechanism (coalesce ran each screen's
-          // per-batch band join single-threaded).
-          vars.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): the index side is the in-session
-          // accumulated union, not a rescan of the whole parquet store;
-          // the batch side reuses the read-back, so the variant explode
-          // runs once per batch instead of twice
-          val (varsB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          val pairs = varsB
-            .select(col("v"), col("tok").as("ntok"), col("cnt").as("ncnt"))
-            .join(all.select(col("v"), col("tok").as("otok"), col("cnt").as("ocnt")), "v")
-            .filter(col("ntok") =!= col("otok"))
-            .select(
-              when(col("ntok") < col("otok"), col("ntok")).otherwise(col("otok")).as("tok_a"),
-              when(col("ntok") < col("otok"), col("ncnt")).otherwise(col("ocnt")).as("cnt_a"),
-              when(col("ntok") < col("otok"), col("otok")).otherwise(col("ntok")).as("tok_b"),
-              when(col("ntok") < col("otok"), col("ocnt")).otherwise(col("ncnt")).as("cnt_b"))
-            .distinct()
-            .filter(levenshtein(col("tok_a"), col("tok_b")) <= 1)
-          explainBatch("editdist-pairs", bid, pairs)
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val read = screen(s, "editdist", tag, srcDir, tokSchema, Seq("store", "pairs")) { b =>
+      val vars = b.df.select(col("tok"), col("cnt"), explode(expr(
+        """array_union(array(tok),
+           transform(sequence(1, length(tok)),
+             i -> concat(substring(tok, 1, i - 1), substring(tok, i + 1, length(tok)))))"""))
+        .as("v"))
+      // round 17 (VERDICT r16 #1): the index side is the in-session
+      // accumulated union, not a rescan of the whole parquet store;
+      // the batch side reuses the read-back, so the variant explode
+      // runs once per batch instead of twice
+      val (varsB, all) = b.append(vars, "store")
+      val pairs = varsB
+        .select(col("v"), col("tok").as("ntok"), col("cnt").as("ncnt"))
+        .join(all.select(col("v"), col("tok").as("otok"), col("cnt").as("ocnt")), "v")
+        .filter(col("ntok") =!= col("otok"))
+        .select(
+          when(col("ntok") < col("otok"), col("ntok")).otherwise(col("otok")).as("tok_a"),
+          when(col("ntok") < col("otok"), col("ncnt")).otherwise(col("ocnt")).as("cnt_a"),
+          when(col("ntok") < col("otok"), col("otok")).otherwise(col("ntok")).as("tok_b"),
+          when(col("ntok") < col("otok"), col("ocnt")).otherwise(col("ncnt")).as("cnt_b"))
+        .distinct()
+        .filter(levenshtein(col("tok_a"), col("tok_b")) <= 1)
+      b.write(pairs, "pairs")
     }
     // a pair can surface twice (both endpoints in one batch match each
     // other through the index's copy of each) — dedup once at the end
     // drop the batch= partition column BEFORE distinct: a pair surfacing
     // in two batches is one pair, and the column must not leak into the
     // graded schema
-    s.read.parquet(pairsOut).drop("batch")
+    read("pairs").drop("batch")
       .distinct().orderBy("tok_a", "tok_b")
   }
 
-  /** Incremental-semdedup core behind `streaming_semdedup_keep`, srcDir
-    * and scratch tag injected so StreamingSemDedupSpec can feed it
-    * hash-INTERLEAVED files (smaller ids arriving in later batches) and
-    * assert the result still equals the batch [[graft.vec.VecOps
-    * .semDedupKeep]] — the order-independence proof for the pair-coverage
-    * argument above. */
   /** Incremental phash near-dup drain (see streaming_phash_neardup's
     * registration comment for semantics). Per micro-batch: fingerprint,
     * append to the store, chunk-band the batch against all-so-far, record
@@ -1890,62 +1866,29 @@ object StreamQueries {
     * wiped per invocation (the file-sink scratch invariant). */
   private[graft] def phashIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
-    val store = s"/dev/shm/graft-phash/store_$tag"
-    val pairsOut = s"/dev/shm/graft-phash/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/phash_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val fp = graft.mm.MultiModal.phash32(batch.select(col("doc_id"),
-            encode(col("text"), "UTF-8").as("payload")))
-          // batchId-keyed OVERWRITE (round 14, the dsir ADVICE r13 fix
-          // applied family-wide): the read-out emits one row per stored
-          // fingerprint with no dedup — replay of an un-keyed append
-          // would duplicate output rows
-          fp.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): store side = in-session union, not
-          // a full parquet rescan; batch side = the read-back, so the
-          // 32-term fingerprint pass runs once per batch instead of twice
-          val (fpB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          def chunked(df: DataFrame, idc: String, phc: String) =
-            df.select(col("doc_id").as(idc), col("phash").as(phc),
-              posexplode(expr(
-                s"transform(sequence(0, 3), c -> shiftright(phash, c * 8) & 255)"))
-                .as(Seq("c", "ck")))
-          val pairs = chunked(fpB, "nid", "nph")
-            .join(chunked(all, "oid", "oph"), Seq("c", "ck"))
-            .filter(col("nid") =!= col("oid"))
-            .filter(expr("bit_count(nph ^ oph) <= 3"))
-            .select(greatest(col("nid"), col("oid")).as("doc_id"),
-              least(col("nid"), col("oid")).as("dup_cand"))
-            .distinct()
-          explainBatch("phash-pairs", bid, pairs)
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val read = screen(s, "phash", tag, srcDir, DocSchema, Seq("store", "pairs")) { b =>
+      val fp = graft.mm.MultiModal.phash32(b.df.select(col("doc_id"),
+        encode(col("text"), "UTF-8").as("payload")))
+      // round 17 (VERDICT r16 #1): store side = in-session union, not
+      // a full parquet rescan; batch side = the read-back, so the
+      // 32-term fingerprint pass runs once per batch instead of twice
+      val (fpB, all) = b.append(fp, "store")
+      def chunked(df: DataFrame, idc: String, phc: String) =
+        df.select(col("doc_id").as(idc), col("phash").as(phc),
+          posexplode(expr(
+            s"transform(sequence(0, 3), c -> shiftright(phash, c * 8) & 255)"))
+            .as(Seq("c", "ck")))
+      val pairs = chunked(fpB, "nid", "nph")
+        .join(chunked(all, "oid", "oph"), Seq("c", "ck"))
+        .filter(col("nid") =!= col("oid"))
+        .filter(expr("bit_count(nph ^ oph) <= 3"))
+        .select(greatest(col("nid"), col("oid")).as("doc_id"),
+          least(col("nid"), col("oid")).as("dup_cand"))
+        .distinct()
+      b.write(pairs, "pairs")
     }
-    val st = s.read.parquet(store)
-    val d = s.read.parquet(pairsOut)
+    val st = read("store")
+    val d = read("pairs")
       .groupBy(col("doc_id")).agg(min(col("dup_cand")).as("dup_of"))
     st.join(d, Seq("doc_id"), "left")
       .select(col("doc_id"), col("phash"),
@@ -1986,95 +1929,55 @@ object StreamQueries {
   private[graft] def wjIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
     val ceil = graft.text.TextQueries.JaccardDfCeiling
-    val store = s"/dev/shm/graft-wj/store_$tag"
-    val dfStore = s"/dev/shm/graft-wj/df_$tag"
-    val docsStore = s"/dev/shm/graft-wj/docs_$tag"
-    val pairsOut = s"/dev/shm/graft-wj/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/wj_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(dfStore))
-    rmrf(new java.io.File(docsStore))
-    rmrf(new java.io.File(pairsOut)); rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    val dfAcc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val toks = batch.select(col("lang"), col("source"), col("doc_id"),
-            explode(array_distinct(graft.text.TextOps.tokens(col("text")))).as("w"))
-          // batchId-keyed OVERWRITE sinks (round 14, the dsir ADVICE r13
-          // fix applied family-wide): the occurrence store feeds the
-          // read-out's df COUNTS and docsStore feeds n_docs — replaying
-          // an un-keyed append would double both and shift idf weights;
-          // keyed overwrite makes a replay replace its own attempt
-          toks.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): the occurrence-store side of the
-          // candidate join is the in-session union, not a full parquet
-          // rescan per trigger; the batch side (and the df-count write
-          // below) reuse the read-back, so the tokenize+explode pass runs
-          // once per batch instead of three times
-          val (toksB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          toksB.groupBy(col("lang"), col("source"), col("w"))
-            .agg(count(lit(1)).as("cnt"))
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$dfStore/batch=$bid")
-          val (_, dfAll) = dfAcc.add(sp, bid, s"$dfStore/batch=$bid")
-          batch.select(col("lang"), col("source"), col("doc_id"))
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$docsStore/batch=$bid")
-          // running df = summed per-batch counts (≡ counting the full
-          // occurrence store, at vocabulary- not occurrence-cost)
-          val banded = dfAll
-            .groupBy(col("lang"), col("source"), col("w"))
-            .agg(sum(col("cnt")).as("df"))
-            .filter(col("df") >= 2 && col("df") <= ceil)
-            .select(col("lang"), col("source"), col("w"))
-          val pairs = toksB.join(banded, Seq("lang", "source", "w"))
-            .select(col("lang"), col("source"), col("w"), col("doc_id").as("nid"))
-            .join(all.join(banded, Seq("lang", "source", "w"))
-              .select(col("lang"), col("source"), col("w"), col("doc_id").as("oid")),
-              Seq("lang", "source", "w"))
-            .filter(col("nid") =!= col("oid"))
-            .select(least(col("nid"), col("oid")).as("a_id"),
-              greatest(col("nid"), col("oid")).as("b_id"))
-            .distinct()
-          explainBatch("wj-pairs", bid, pairs)
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      dfAcc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val read = screen(s, "wj", tag, srcDir, DocSchema,
+        Seq("store", "df", "docs", "pairs")) { b =>
+      val toks = b.df.select(col("lang"), col("source"), col("doc_id"),
+        explode(array_distinct(graft.text.TextOps.tokens(col("text")))).as("w"))
+      // the occurrence store feeds the read-out's df COUNTS and the docs
+      // store feeds n_docs — the batchId-keyed stores are what keep a
+      // replay from doubling both and shifting idf weights.
+      // round 17 (VERDICT r16 #1): the occurrence-store side of the
+      // candidate join is the in-session union, not a full parquet
+      // rescan per trigger; the batch side (and the df-count write
+      // below) reuse the read-back, so the tokenize+explode pass runs
+      // once per batch instead of three times
+      val (toksB, all) = b.append(toks, "store")
+      val (_, dfAll) = b.append(toksB.groupBy(col("lang"), col("source"), col("w"))
+        .agg(count(lit(1)).as("cnt")), "df")
+      b.write(b.df.select(col("lang"), col("source"), col("doc_id")), "docs")
+      // running df = summed per-batch counts (≡ counting the full
+      // occurrence store, at vocabulary- not occurrence-cost)
+      val banded = dfAll
+        .groupBy(col("lang"), col("source"), col("w"))
+        .agg(sum(col("cnt")).as("df"))
+        .filter(col("df") >= 2 && col("df") <= ceil)
+        .select(col("lang"), col("source"), col("w"))
+      val pairs = toksB.join(banded, Seq("lang", "source", "w"))
+        .select(col("lang"), col("source"), col("w"), col("doc_id").as("nid"))
+        .join(all.join(banded, Seq("lang", "source", "w"))
+          .select(col("lang"), col("source"), col("w"), col("doc_id").as("oid")),
+          Seq("lang", "source", "w"))
+        .filter(col("nid") =!= col("oid"))
+        .select(least(col("nid"), col("oid")).as("a_id"),
+          greatest(col("nid"), col("oid")).as("b_id"))
+        .distinct()
+      b.write(pairs, "pairs")
     }
     // read-out: the batch query's exact scoring, semi-joined to candidates
     // (batch= partition column dropped BEFORE distinct — a candidate
     // surfacing in two batches is one candidate, not a double-counted
     // join row)
-    val all = s.read.parquet(store).drop("batch")
-    val cand = s.read.parquet(pairsOut).drop("batch").distinct()
-    val blocks = s.read.parquet(docsStore)
+    val all = read("store").drop("batch")
+    val cand = read("pairs").drop("batch").distinct()
+    val blocks = read("docs")
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n_docs"))
-    // round 17: final df = summed per-batch dfStore counts — the SAME
+    // round 17: final df = summed per-batch df-store counts — the SAME
     // additive identity the drain's band already relies on (≡ counting
     // the full occurrence store, proven round 13) — so the read-out no
     // longer re-aggregates the whole occurrence store; `all` is then
     // consumed exactly once (inside withDf) and its extra checkpoint
     // materialization pass is gone too.
-    val dfAll = s.read.parquet(dfStore)
+    val dfAll = read("df")
       .groupBy(col("lang"), col("source"), col("w"))
       .agg(sum(col("cnt")).as("df"))
     val withDf = all
@@ -2104,14 +2007,15 @@ object StreamQueries {
       .orderBy("a_id", "b_id")
   }
 
+  /** Incremental-semdedup core behind `streaming_semdedup_keep`, srcDir
+    * and scratch tag injected so StreamingSemDedupSpec can feed it
+    * hash-INTERLEAVED files (smaller ids arriving in later batches) and
+    * assert the result still equals the batch [[graft.vec.VecOps
+    * .semDedupKeep]] — the order-independence proof for the pair-coverage
+    * argument above. */
   private[graft] def semdedupIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
     graft.functions.DotF32.register(s)
-    val store = s"/dev/shm/graft-semdedup/store_$tag"
-    val pairsOut = s"/dev/shm/graft-semdedup/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/semdedup_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
     // hierarchical assignment index (round 12, mirroring the batch twin's
     // two-stage rule — the shared oracle demands identical cells): coarse
     // anchors + fine→coarse map derived ONCE from the shared centroid
@@ -2122,75 +2026,37 @@ object StreamQueries {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val stream = s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          val sp = batch0.sparkSession
-          // repartition to the drain width BEFORE the assignment maps:
-          // one file per trigger means the batch scan yields ~(file size /
-          // maxPartitionBytes) splits — 2 at the 1000× decade — and the
-          // broadcast-join dot-product stages (hierAssign's coarse cross
-          // + fine f2g join) inherit that width, so without this the
-          // screen's dominant stages run ~2-wide however many shuffle
-          // partitions the drain sets (measured: widening the shuffle
-          // alone moved 729 → 792 s @1000×; BASELINE.md round-16)
-          val batch = batch0.repartition(drainParts.toInt)
-          val assigned = graft.vec.VecOps.hierAssign(
-            batch.select(col("vec_id"), col("embedding")), idx)
-          // one part-file per batch: the store is re-read EVERY batch, so
-          // without this it accumulates (shuffle partitions × batches)
-          // tiny files and the read-back dominates the drain.
-          // batchId-keyed OVERWRITE (round 14, the dsir ADVICE r13 fix
-          // applied family-wide): the read-out `st` below emits one row
-          // per stored vector with no dedup, so an at-least-once replay
-          // of an un-keyed append would duplicate output rows; keying on
-          // batchId makes a replay replace its own earlier attempt.
-          // repartition(1), NOT coalesce(1) (round 16): coalesce is a
-          // NARROW transformation — it collapses the upstream shuffle
-          // stage itself to one task, so the assignment join (and below,
-          // the whole batch×store dot-product band) was running
-          // single-threaded however wide the drain; repartition keeps
-          // one file but puts a real exchange between the parallel work
-          // and the writer (measured 516 → 180 s @1000×, BASELINE.md
-          // round-16).
-          assigned.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): store side = in-session union, not
-          // a full parquet rescan; batch side = the read-back, so
-          // hierAssign runs once per batch instead of twice
-          val (assignedB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          val pairs = assignedB.select(col("cid"), col("vec_id").as("nid"),
-              col("embedding").as("ne"))
-            .join(all.select(col("cid"), col("vec_id").as("oid"),
-              col("embedding").as("oe")), "cid")
-            .filter(col("nid") =!= col("oid"))
-            .withColumn("sim", expr("dot_f32(ne, oe)"))
-            .filter(col("sim") >= 0.45)
-            .select(greatest(col("nid"), col("oid")).as("vec_id"),
-              least(col("nid"), col("oid")).as("dup_cand"))
-          // pairs read-out min-aggregates (replay-duplicate-tolerant),
-          // but the same batchId keying keeps the sink uniformly
-          // idempotent; repartition(1) for the same narrow-collapse
-          // reason as the store write above
-          explainBatch("semdedup-pairs", bid, pairs)
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val read = screen(s, "semdedup", tag, srcDir, embSchema, Seq("store", "pairs")) { b =>
+      // repartition to the drain width BEFORE the assignment maps:
+      // one file per trigger means the batch scan yields ~(file size /
+      // maxPartitionBytes) splits — 2 at the 1000× decade — and the
+      // broadcast-join dot-product stages (hierAssign's coarse cross
+      // + fine f2g join) inherit that width, so without this the
+      // screen's dominant stages run ~2-wide however many shuffle
+      // partitions the drain sets (measured: widening the shuffle
+      // alone moved 729 → 792 s @1000×; BASELINE.md round-16)
+      val batch = b.df.repartition(drainParts.toInt)
+      val assigned = graft.vec.VecOps.hierAssign(
+        batch.select(col("vec_id"), col("embedding")), idx)
+      // the read-out `st` below emits one row per stored vector with no
+      // dedup — the batchId-keyed store is what makes a replay safe.
+      // round 17 (VERDICT r16 #1): store side = in-session union, not
+      // a full parquet rescan; batch side = the read-back, so
+      // hierAssign runs once per batch instead of twice
+      val (assignedB, all) = b.append(assigned, "store")
+      val pairs = assignedB.select(col("cid"), col("vec_id").as("nid"),
+          col("embedding").as("ne"))
+        .join(all.select(col("cid"), col("vec_id").as("oid"),
+          col("embedding").as("oe")), "cid")
+        .filter(col("nid") =!= col("oid"))
+        .withColumn("sim", expr("dot_f32(ne, oe)"))
+        .filter(col("sim") >= 0.45)
+        .select(greatest(col("nid"), col("oid")).as("vec_id"),
+          least(col("nid"), col("oid")).as("dup_cand"))
+      b.write(pairs, "pairs")
     }
-    val st = s.read.parquet(store).select(col("vec_id"), col("cid"))
-    val d = s.read.parquet(pairsOut)
+    val st = read("store").select(col("vec_id"), col("cid"))
+    val d = read("pairs")
       .groupBy(col("vec_id")).agg(min(col("dup_cand")).as("dup_of"))
     st.join(d, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"),
@@ -2213,60 +2079,32 @@ object StreamQueries {
     * ([[graft.text.TextQueries.dsirOracle]], the shared oracle). */
   private[graft] def dsirIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
-    val bStore = s"/dev/shm/graft-dsir/buckets_$tag"
-    val dStore = s"/dev/shm/graft-dsir/docs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/dsir_$tag"
-    rmrf(new java.io.File(bStore)); rmrf(new java.io.File(dStore))
-    rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val tok = batch.select(col("doc_id"), col("source"),
-              explode(graft.text.TextOps.tokens(col("text"))).as("w"))
-            .withColumn("b", graft.text.TextOps.hash60(col("w")) % 64)
-          // batchId-keyed OVERWRITE sinks (round 14, ADVICE r13):
-          // foreachBatch is at-least-once, and these counts are plain
-          // additive sums — a replayed micro-batch re-running an
-          // un-keyed append would double its bucket/doc counts and
-          // silently corrupt the screen. Keying each batch's output on
-          // its batchId and overwriting makes the sink idempotent: a
-          // replay replaces its own earlier attempt, never adds a
-          // second copy (the exactly-once foreachBatch sink contract).
-          // The batch= dirname is a partition column the read-out
-          // never selects.
-          // round 17: the doc store is written FIRST, carrying the doc's
-          // source (a doc has exactly one source, so the extra grouping
-          // column splits no group and the read-out's (doc_id) agg is
-          // unchanged); the bucket counts then derive from the written
-          // file's read-back, so the tokenize+explode pass runs once per
-          // batch instead of twice. cr = Σ doc counts ≡ the old token
-          // count(); ct's src0 sum defaults missing buckets to 0
-          // explicitly (sum over an empty when() is NULL where the old
-          // count() was 0, and the read-out's lr algebra needs the 0).
-          tok.groupBy(col("doc_id"), col("source"), col("b"))
-            .agg(count(lit(1)).as("cnt"))
-            .transform(oneFileStore).write.mode("overwrite").parquet(s"$dStore/batch=$bid")
-          sp.read.parquet(s"$dStore/batch=$bid")
-            .groupBy(col("b"))
-            .agg(sum(col("cnt")).as("cr"),
-              sum(when(col("source") === "src0", col("cnt")).otherwise(lit(0L))).as("ct"))
-            .transform(oneFileStore).write.mode("overwrite").parquet(s"$bStore/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    val counts = s.read.parquet(bStore)
+    val read = screen(s, "dsir", tag, srcDir, DocSchema, Seq("buckets", "docs")) { b =>
+      val tok = b.df.select(col("doc_id"), col("source"),
+          explode(graft.text.TextOps.tokens(col("text"))).as("w"))
+        .withColumn("b", graft.text.TextOps.hash60(col("w")) % 64)
+      // these counts are plain additive sums, so a replayed micro-batch
+      // must replace (the batchId-keyed store), never add to, its
+      // earlier attempt. The batch= dirname is a partition column the
+      // read-out never selects.
+      // round 17: the doc store is written FIRST, carrying the doc's
+      // source (a doc has exactly one source, so the extra grouping
+      // column splits no group and the read-out's (doc_id) agg is
+      // unchanged); the bucket counts then derive from the written
+      // file's read-back, so the tokenize+explode pass runs once per
+      // batch instead of twice. cr = Σ doc counts ≡ the old token
+      // count(); ct's src0 sum defaults missing buckets to 0
+      // explicitly (sum over an empty when() is NULL where the old
+      // count() was 0, and the read-out's lr algebra needs the 0).
+      val docs = b.write(tok.groupBy(col("doc_id"), col("source"), col("b"))
+        .agg(count(lit(1)).as("cnt")), "docs")
+      b.write(b.sp.read.parquet(docs)
+        .groupBy(col("b"))
+        .agg(sum(col("cnt")).as("cr"),
+          sum(when(col("source") === "src0", col("cnt")).otherwise(lit(0L))).as("ct")),
+        "buckets")
+    }
+    val counts = read("buckets")
       .groupBy(col("b"))
       .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
     val totals = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
@@ -2275,7 +2113,7 @@ object StreamQueries {
     val lr = counts.crossJoin(broadcast(totals))
       .withColumn("lr_um", expr(graft.text.TextQueries.dsirLrUmExpr))
       .select(col("b"), col("lr_um"))
-    s.read.parquet(dStore).join(lr, Seq("b"))
+    read("docs").join(lr, Seq("b"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_tokens"),
         sum(col("cnt") * col("lr_um")).as("logw_um"))
@@ -2300,13 +2138,6 @@ object StreamQueries {
     * shape: nothing is re-aggregated, ever. */
   private[graft] def decontamIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
-    val hitStore = s"/dev/shm/graft-decon/hits_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/decon_$tag"
-    rmrf(new java.io.File(hitStore)); rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
     // round 17: the eval index rides the session Shared registry — an
     // eval set is STATIC by definition (the screen's own design comment),
     // yet each bench rep re-derived the same shingle explode; the
@@ -2318,33 +2149,17 @@ object StreamQueries {
         .filter(col("source") === "src0")
         .select(col("doc_id"),
           explode(graft.text.TextOps.shingles(col("text"), 5)).as("g")))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val bg = batch.filter(col("source") =!= "src0")
-            .select(explode(
-              graft.text.TextOps.shingles(col("text"), 5)).as("g"))
-            .distinct()
-          // batchId-keyed OVERWRITE (round 14): the monotone-union hit
-          // store is replay-tolerant (distinct at read-out), but the
-          // keyed sink keeps the incremental family uniformly idempotent
-          evalG.join(bg, Seq("g"), "left_semi")
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$hitStore/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    val read = screen(s, "decon", tag, srcDir, DocSchema, Seq("hits")) { b =>
+      val bg = b.df.filter(col("source") =!= "src0")
+        .select(explode(
+          graft.text.TextOps.shingles(col("text"), 5)).as("g"))
+        .distinct()
+      b.write(evalG.join(bg, Seq("g"), "left_semi"), "hits")
+    }
     val totals = evalG.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     // batch= partition column dropped BEFORE distinct: a (doc, gram) hit
     // landed by two batches is ONE hit of the monotone union
-    val hits = s.read.parquet(hitStore).drop("batch").distinct()
+    val hits = read("hits").drop("batch").distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     totals.join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
